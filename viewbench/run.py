@@ -29,7 +29,13 @@ TRACE_DIR = os.path.join(HERE, "traces")
 
 WORKLOADS = ("replay_dashboard", "live_usage", "resync_batch")
 BUILD_TIMEOUT_S = 840
-RUN_TIMEOUT_S = 170
+
+
+def run_timeout_s(seconds, trace):
+    """A run is start-up, three set-ups and a warm-up (about 40 s), then one
+    window of `seconds`, or two and the traced checks with tracing; each
+    window may overrun by up to half of itself. 160 s at 10 s traced."""
+    return 100 + (2 + trace) * seconds * 2
 
 # Spark on JDK 17 outside spark-submit needs the module opens that
 # spark-submit would add (the program's own build.sbt carries the same list).
@@ -139,7 +145,7 @@ def main():
     cmd += ["-cp", cp, "viewbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
             "--trace", str(a.trace), "--work", os.path.join(WORK_DIR, "data"), "--traces", TRACE_DIR]
-    code, out = run_group(cmd, RUN_TIMEOUT_S, stdout=subprocess.PIPE, text=True)
+    code, out = run_group(cmd, run_timeout_s(a.seconds, a.trace), stdout=subprocess.PIPE, text=True)
     lines = out.splitlines()
     if code != 0 or not lines or not lines[-1].startswith('{"correct"'):
         sys.stderr.write(out[-4000:])

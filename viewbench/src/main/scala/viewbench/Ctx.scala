@@ -17,10 +17,10 @@ import graft.sink.{ColumnSpec, TableSpec}
 final case class Window(e2e: Map[String, Double], latencyMs: Seq[Double],
                         layers: Map[String, Double], attempted: Long, mismatch: Long,
                         samples: Map[String, Int], progress: Seq[StreamingQueryProgress]) {
-  /** End-to-end metrics with the latency percentiles; p99 needs 1000
-    * samples (see [[Stats.tail]]). */
+  /** End-to-end metrics with the latency percentiles; each needs 10
+    * distinct samples beyond it (see [[Stats.tail]]). */
   def endToEnd: Map[String, Double] = e2e ++ Map(
-    "latency_p50_ms" -> Stats.median(latencyMs),
+    "latency_p50_ms" -> Stats.tail(latencyMs, 0.5),
     "latency_p99_ms" -> Stats.tail(latencyMs, 0.99))
 }
 
@@ -109,11 +109,14 @@ final class Ctx(val spark: SparkSession, val work: File, val seed: Long) {
       "streaming.delta_ratio" -> (if (rowsIn == 0) 0.0 else deltasOut.toDouble / rowsIn))
   }
 
-  def sinkLayers(): Map[String, Double] = meter.synchronized {
+  /** Sink metrics of the window; `events` is the number of new log events
+    * its transactions carried, the base of the per-event shares. */
+  def sinkLayers(events: Long): Map[String, Double] = meter.synchronized {
     val ts = meter.txns.filter(_.applied).toSeq
     val jdbcNs = ts.map(t => t.endNs - t.startNs - t.waitNs)
     val copies = ts.map(t => t.inserts + t.retractions).sum
     Map(
+      "sink.prepare_ms_p50" -> p50(ts.filter(_.prepareNs >= 0).map(_.prepareNs / 1e6)),
       "sink.txn_ms_p50" -> p50(ts.map(t => (t.endNs - t.startNs) / 1e6)),
       "sink.wait_ms_p50" -> p50(ts.map(_.waitNs / 1e6)),
       "sink.jdbc_ms_p50" -> p50(jdbcNs.map(_ / 1e6)),
@@ -121,6 +124,8 @@ final class Ctx(val spark: SparkSession, val work: File, val seed: Long) {
       "sink.readback_ms_p50" -> p50(meter.readbackNs.toSeq.map(_ / 1e6)),
       "sink.inserts" -> ts.map(_.inserts).sum.toDouble,
       "sink.retractions" -> ts.map(_.retractions).sum.toDouble,
+      "sink.inserts_per_event" -> ts.map(_.inserts).sum.toDouble / events,
+      "sink.retractions_per_event" -> ts.map(_.retractions).sum.toDouble / events,
       "sink.replayed_batches" -> meter.txns.count(!_.applied).toDouble,
       "sink.offset_sources" -> meter.txns.map(_.offsetSources).maxOption.getOrElse(0).toDouble)
   }

@@ -23,11 +23,10 @@ final case class LogEvent(source: String, machine: String, offset: Long,
   * @param staleShare share of events whose timestamp is older than the
   *                   machine's latest (a stale reading: no dashboard change)
   * @param skew       Zipf exponent of machine popularity (0 = uniform)
-  * @param drillShare share of machines named `Drill…`; the others are
-  *                   `Press…` and are filtered out by the views
-  */
-final case class LogShape(machines: Int, sources: Int, staleShare: Double,
-                          skew: Double, drillShare: Double)
+  *
+  * Every machine is a `Drill…`, as in the reference's examples; the views
+  * keep only those. */
+final case class LogShape(machines: Int, sources: Int, staleShare: Double, skew: Double)
 
 /** Seeded machine-event log generator. Every decision comes from one
   * `SplittableRandom(seed)`, so one seed always yields the same events;
@@ -43,10 +42,7 @@ final class Gen(shape: LogShape, seed: Long) {
   require(shape.machines > 0 && shape.sources > 0)
   private val rnd = new SplittableRandom(seed)
 
-  private val names: Array[String] = Array.tabulate(shape.machines) { i =>
-    val drill = rnd.nextDouble() < shape.drillShare
-    f"${if (drill) "Drill" else "Press"}$i%06d"
-  }
+  private val names: Array[String] = Array.tabulate(shape.machines)(i => f"Drill$i%06d")
   // Zipf CDF over a seeded permutation, so hot machines are spread over
   // sources and names
   private val perm: Array[Int] = {

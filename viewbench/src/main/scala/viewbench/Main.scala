@@ -24,9 +24,10 @@ object Main {
     "streaming.state_rows" -> "count", "streaming.state_mb" -> "MB",
     "streaming.batches" -> "count", "streaming.rows_in" -> "count",
     "streaming.deltas_out" -> "count", "streaming.delta_ratio" -> "ratio",
-    "sink.txn_ms_p50" -> "ms", "sink.wait_ms_p50" -> "ms", "sink.jdbc_ms_p50" -> "ms",
-    "sink.rows_per_s" -> "1/s", "sink.readback_ms_p50" -> "ms",
+    "sink.prepare_ms_p50" -> "ms", "sink.txn_ms_p50" -> "ms", "sink.wait_ms_p50" -> "ms",
+    "sink.jdbc_ms_p50" -> "ms", "sink.rows_per_s" -> "1/s", "sink.readback_ms_p50" -> "ms",
     "sink.inserts" -> "count", "sink.retractions" -> "count",
+    "sink.inserts_per_event" -> "ratio", "sink.retractions_per_event" -> "ratio",
     "sink.replayed_batches" -> "count", "sink.offset_sources" -> "count",
     "flow.snapshot_ms_p50" -> "ms", "core.diff_rows" -> "count",
     "jvm.gc_ms" -> "ms", "gen.late_ms_max" -> "ms")
@@ -71,6 +72,7 @@ object Main {
           val gc0 = ctx.gcMs()
           val traced = wl.window(seconds)
           val gcMs = ctx.gcMs() - gc0
+          val txns = ctx.meter.synchronized(ctx.meter.txns.toList)
           val (flowMs, diffRows) = wl.flowCheck()
           traced.progress.foreach { p =>
             val start = Workload.isoMicros(p.timestamp)
@@ -83,7 +85,7 @@ object Main {
             "flow.snapshot_ms_p50" -> Stats.median(flowMs),
             "core.diff_rows" -> diffRows.toDouble,
             "jvm.gc_ms" -> gcMs.toDouble)
-          writeTrace(new File(traces, s"$name-seed$seed.json"), name, seed, plain, traced, layers)
+          writeTrace(new File(traces, s"$name-seed$seed.json"), name, seed, plain, traced, txns, layers)
           PerLayer.map { case (m, u) => (m, layers.getOrElse(m, 0.0), u) }
         }
       val attempted = windows.map(_.attempted).sum
@@ -108,9 +110,10 @@ object Main {
 
   /** One JSON file per traced run: both windows' end-to-end metrics and
     * the tracing overhead between them, the per-layer metrics, the
-    * streaming progress counts per micro-batch and every span. */
+    * streaming progress counts per micro-batch, every sink transaction
+    * with its inserts and retractions, and every span. */
   private def writeTrace(f: File, name: String, seed: Long, plain: Window, traced: Window,
-                         layers: Map[String, Double]): Unit = {
+                         txns: Seq[Txn], layers: Map[String, Double]): Unit = {
     val overhead = plain.endToEnd.map { case (k, v) => k -> (traced.endToEnd(k) / v - 1.0) }
     val progress = traced.progress.map { p =>
       val d = p.durationMs
@@ -119,8 +122,13 @@ object Main {
       s"""{"batchId": ${p.batchId}, "numInputRows": ${p.numInputRows}, "durationMs": $durations, """ +
         s""""stateRows": ${p.stateOperators.map(_.numRowsTotal).sum}, "stateRowsUpdated": ${p.stateOperators.map(_.numRowsUpdated).sum}}"""
     }
-    // a sink transaction inside a micro-batch runs on the engine's thread:
-    // its parent is the streaming.batch span of that batch id around it
+    val sinkTxns = txns.map { t =>
+      s"""{"batchId": ${t.batchId}, "applied": ${t.applied}, "prepareMs": ${t.prepareNs / 1e6}, """ +
+        s""""txnMs": ${(t.endNs - t.startNs) / 1e6}, "waitMs": ${t.waitNs / 1e6}, """ +
+        s""""inserts": ${t.inserts}, "retractions": ${t.retractions}}"""
+    }
+    // a sink call inside a micro-batch runs on the engine's thread: its
+    // parent is the streaming.batch span of that batch id around it
     val batches = Trace.all.filter(_.name == "streaming.batch")
     val spans = Trace.all.sortBy(_.startUs).map { s =>
       val parent = if (s.parent != 0 || s.name == "streaming.batch") s.parent
@@ -137,6 +145,7 @@ object Main {
          |"tracing_overhead": ${obj(overhead)},
          |"per_layer": ${obj(layers)},
          |"progress": [${progress.mkString(",\n")}],
+         |"sink_txns": [${sinkTxns.mkString(",\n")}],
          |"spans": [${spans.mkString(",\n")}]}
          |""".stripMargin)
     finally w.close()

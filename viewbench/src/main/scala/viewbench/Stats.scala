@@ -13,14 +13,17 @@ object Stats {
 
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
 
-  /** Samples strictly above the `p`-quantile's rank. */
-  def beyond(n: Int, p: Double): Int = n - math.ceil(p * n).toInt
+  /** Distinct values strictly above `q`: copies of one observation count
+    * once. */
+  def beyond(xs: Seq[Double], q: Double): Int = xs.filter(_ > q).distinct.size
 
-  /** A tail percentile is reported only with at least 10 samples beyond
-    * it: fewer would make it the reading of one or two outliers. */
+  /** A percentile of a latency is reported only with at least 10 distinct
+    * observations beyond it: fewer would make it the reading of one or two
+    * outliers, however many copies of them there are. */
   def tail(xs: Seq[Double], p: Double): Double = {
-    require(beyond(xs.size, p) >= 10,
-      s"p${p * 100} needs 10 samples beyond it; ${xs.size} samples give ${beyond(xs.size, p)}")
-    quantile(xs, p)
+    val q = quantile(xs, p)
+    val n = beyond(xs, q)
+    require(n >= 10, s"p${p * 100} needs 10 distinct samples beyond it; ${xs.size} samples give $n")
+    q
   }
 }

@@ -89,35 +89,37 @@ object Workload {
   }
 }
 
-/** Closed loop: full-history replays from offset 0 into a fresh sink,
-  * one after another. ~20k machines, 30 files of 1000 events, 10 files
-  * per trigger: each replay is 3 micro-batches of 10k events, the later
-  * ones retracting many rows the earlier ones inserted. */
+/** One replay into database `db`: its log size, its span and, per
+  * micro-batch in order, the input rows and the commit stamp. */
+final case class Replay(db: String, sink: MeteredSink, logEvents: Int, startUs: Long,
+                        endUs: Long, progress: Seq[StreamingQueryProgress], commitUs: Seq[Long])
+
+/** Closed loop: full replays of the log from offset 0 into a fresh sink,
+  * one after another. A 30k-event history over 20k machines, 1000 events
+  * a file, 11 files a trigger: each replay is 3 micro-batches of up to
+  * 11k events, the later ones retracting many rows the earlier ones
+  * inserted. Meanwhile events keep arriving at a fixed rate, stamped with
+  * the time each was due; those that arrived during one replay join the
+  * log's end before the next, and become visible when that replay commits
+  * the batch that reads them. */
 final class ReplayDashboard(ctx: Ctx) extends Workload {
-  private val shape = LogShape(machines = 20000, sources = 8, staleShare = 0.1, skew = 0.6, drillShare = 0.9)
+  private val shape = LogShape(machines = 20000, sources = 8, staleShare = 0.05, skew = 0.0)
   private val FileEvents = 1000
-  private val FilesPerTrigger = 10
-  private val events: Vector[LogEvent] = {
-    val g = new Gen(shape, ctx.seed); Vector.fill(30000)(g.next())
-  }
+  private val FilesPerTrigger = 11
+  private val ArrivalRate = 300
+  private val gen = new Gen(shape, ctx.seed)
+  private val events = ArrayBuffer.fill(30000)(gen.next())
   private val logDir = ctx.dir("replay/log")
   private val warmDir = ctx.dir("replay/warm")
-  ctx.writeLog(logDir, events, FileEvents)
-  ctx.writeLog(warmDir, events.take(FileEvents), FileEvents)
-  private val expected = Reference.dashboard(events)
-  private val expectedWarm = Reference.dashboard(events.take(FileEvents))
+  private var files = ctx.writeLog(logDir, events.toSeq, FileEvents)
+  ctx.writeLog(warmDir, events.take(FileEvents).toSeq, FileEvents)
 
-  private var mismatch = 0L
-  private var lastDb: Option[String] = None
+  private var dbs = List.empty[String]
 
-  private final case class Replay(startUs: Long, endUs: Long, progress: Seq[StreamingQueryProgress])
-
-  /** One replay of `dir` into a fresh database and checkpoint; verifies
-    * the table against `want`. */
-  private def replay(dir: File, want: Seq[Seq[Any]]): Replay = {
-    lastDb.foreach(ctx.dropDb)
+  /** One replay of `dir` into a fresh database and checkpoint. */
+  private def replay(dir: File, logEvents: Int): Replay = {
     val db = ctx.fresh("replay")
-    lastDb = Some(db)
+    dbs ::= db
     val ckpt = ctx.dir(s"ckpt/$db")
     val sink = new MeteredSink(ctx.url(db), Ctx.DashboardSpec, ctx.meter)
     val deltas = Workload.dashboardDeltas(ctx.logStream(dir, Some(FilesPerTrigger)))
@@ -125,46 +127,73 @@ final class ReplayDashboard(ctx: Ctx) extends Workload {
     val startUs = Clock.micros()
     val q = DeltaPipeline.start(deltas, sink, ckpt.getPath, Trigger.AvailableNow())
     q.awaitTermination()
-    val endUs = ctx.meter.synchronized(ctx.meter.txns.drop(txns0).map(_.commitUs).maxOption)
-      .getOrElse(throw new IllegalStateException("replay committed nothing"))
+    val txns = ctx.meter.synchronized(ctx.meter.txns.drop(txns0).toList)
     val progress = Workload.batches(q)
-    mismatch += Reference.bagDiff(sink.readRows(), want)
-    ctx.deleteTree(ckpt)
-    Replay(startUs, endUs, progress)
+    val commitUs = progress.map(p => txns.find(_.batchId == p.batchId)
+      .getOrElse(throw new IllegalStateException(s"batch ${p.batchId} never committed")).commitUs)
+    Replay(db, sink, logEvents, startUs, commitUs.max, progress, commitUs)
+  }
+
+  /** Bag difference of each replay's table against the reference over the
+    * log it replayed; drops every database but the last one's. Runs after
+    * the replays, so that checking adds nothing to the arrivals' latency. */
+  private def verify(replays: Seq[Replay], log: Seq[LogEvent]): Long = {
+    val diff = replays.map(r => Reference.bagDiff(r.sink.readRows(), Reference.dashboard(log.take(r.logEvents)))).sum
+    dbs.drop(1).foreach(ctx.dropDb)
+    dbs = dbs.take(1)
+    ctx.deleteTree(ctx.dir("ckpt"))
+    diff
   }
 
   def setup(): Double = {
     val t0 = System.nanoTime()
-    replay(warmDir, expectedWarm)
-    (System.nanoTime() - t0) / 1e9
+    val r = replay(warmDir, FileEvents)
+    val secs = (System.nanoTime() - t0) / 1e9
+    require(verify(Seq(r), events.take(FileEvents).toSeq) == 0, "warm-up replay does not match the reference")
+    secs
   }
 
   def window(seconds: Int): Window = {
-    ctx.meter.reset(); mismatch = 0
+    ctx.meter.reset()
     val t0 = System.nanoTime()
     val replays = ArrayBuffer.empty[Replay]
-    // start another replay only if at least half of it fits the window
+    val lat = ArrayBuffer.empty[Double]
+    var arrivalsFromUs, arrivals = 0L
+    // at least two replays, so that events arrive during one; start
+    // another only if at least half of it fits the window
     def left = seconds - (System.nanoTime() - t0) / 1e9
-    while (replays.isEmpty || left > (replays.last.endUs - replays.last.startUs) / 2e6)
-      replays += replay(logDir, expected)
-    val txns = ctx.meter.synchronized(ctx.meter.txns.toList)
-    // every event of the history is due when its replay starts and is
-    // visible once the micro-batch that read it commits
-    val lat = replays.toSeq.flatMap { r =>
-      r.progress.flatMap { p =>
-        val commit = txns.find(t => t.batchId == p.batchId && t.commitUs >= r.startUs)
-          .getOrElse(throw new IllegalStateException(s"batch ${p.batchId} never committed"))
-        Seq.fill(p.numInputRows.toInt)((commit.commitUs - r.startUs) / 1000.0)
+    while (replays.size < 2 || left > (replays.last.endUs - replays.last.startUs) / 2e6) {
+      val arrived = ArrayBuffer.empty[LogEvent]
+      if (replays.isEmpty) arrivalsFromUs = Clock.micros()
+      else {
+        val now = Clock.micros()
+        def due = arrivalsFromUs + arrivals * 1000000L / ArrivalRate
+        while (due <= now) { arrived += gen.next(stampMicros = due); arrivals += 1 }
+        Gen.writeFile(logDir, f"part-$files%07d.jsonl", arrived.toSeq, Ctx.mtime(files))
+        files += 1
       }
+      val pos0 = events.size
+      events ++= arrived
+      val r = replay(logDir, events.size)
+      // an arrival is visible once the batch that read its position commits
+      val readUpTo = r.progress.scanLeft(0L)(_ + _.numInputRows).tail
+      arrived.zipWithIndex.foreach { case (e, i) =>
+        val b = readUpTo.indexWhere(_ > pos0 + i)
+        require(b >= 0, s"replay never read log position ${pos0 + i}")
+        lat += (r.commitUs(b) - e.tsMicros) / 1000.0
+      }
+      replays += r
     }
+    val mismatch = verify(replays.toSeq, events.toSeq)
     val secs = replays.toSeq.map(r => (r.endUs - r.startUs) / 1e6)
+    val replayed = replays.map(_.logEvents.toLong).sum
     val progs = replays.toSeq.flatMap(_.progress)
     Window(
       e2e = Map(
-        "events_per_s" -> events.size * secs.size / secs.sum,
+        "events_per_s" -> replayed / secs.sum,
         "resync_s" -> Stats.median(secs)),
-      latencyMs = lat,
-      layers = ctx.streamingLayers(progs, ctx.deltasOut()) ++ ctx.sinkLayers(),
+      latencyMs = lat.toSeq,
+      layers = ctx.streamingLayers(progs, ctx.deltasOut()) ++ ctx.sinkLayers(replayed),
       attempted = progs.size, mismatch = mismatch,
       samples = Map("replays" -> replays.size, "latency" -> lat.size, "batches" -> progs.size),
       progress = progs)
@@ -175,11 +204,11 @@ final class ReplayDashboard(ctx: Ctx) extends Workload {
     val view = Examples.dashboard(ctx.logBatch(logDir)).toDF()
     val ms = (1 to 3).map(_ => Workload.timedMs(Trace.span("flow.snapshot")(ctx.run(view))))
     // the last replay's table is still in place
-    val sink = new MeteredSink(ctx.url(lastDb.get), Ctx.DashboardSpec, new SinkMeter)
+    val sink = new MeteredSink(ctx.url(dbs.head), Ctx.DashboardSpec, new SinkMeter)
     (ms, Workload.diffRows(ctx, view, sink))
   }
 
-  def close(): Unit = lastDb.foreach(ctx.dropDb)
+  def close(): Unit = { dbs.foreach(ctx.dropDb); dbs = Nil }
 }
 
 /** Open loop: on top of a replayed history, events arrive at a fixed rate
@@ -187,7 +216,7 @@ final class ReplayDashboard(ctx: Ctx) extends Workload {
   * due. The usage view keeps per-machine open starts in state and only
   * ever inserts. */
 final class LiveUsage(ctx: Ctx) extends Workload {
-  private val shape = LogShape(machines = 2000, sources = 8, staleShare = 0.0, skew = 0.6, drillShare = 0.9)
+  private val shape = LogShape(machines = 2000, sources = 8, staleShare = 0.0, skew = 0.0)
   private val Rate = 2000
   private val FileMs = 100
   private val FileEvents = Rate * FileMs / 1000
@@ -262,7 +291,7 @@ final class LiveUsage(ctx: Ctx) extends Workload {
         "events_per_s" -> live.size / ((lastCommit - startUs) / 1e6),
         "resync_s" -> Stats.median(rounds)),
       latencyMs = lat,
-      layers = ctx.streamingLayers(progs, ctx.deltasOut()) ++ ctx.sinkLayers() +
+      layers = ctx.streamingLayers(progs, ctx.deltasOut()) ++ ctx.sinkLayers(live.size) +
         ("gen.late_ms_max" -> lateMs),
       attempted = progs.size, mismatch = mismatch,
       samples = Map("latency" -> lat.size, "batches" -> progs.size), progress = progs)
@@ -281,13 +310,15 @@ final class LiveUsage(ctx: Ctx) extends Workload {
   }
 }
 
-/** Batch profile: after a seeded history, each round appends a slice of
-  * 250 events to the log and re-syncs the dashboard and usage Examples
-  * views with `BatchIncremental.sync` (recompute, read the table back,
-  * diff, apply). Cost grows with log and view size, not churn. */
+/** Batch profile: after a seeded history, events arrive at a fixed rate
+  * (200 events/s), stamped with the time each was due. Each round appends
+  * those that arrived since the last one to the log and re-syncs the
+  * dashboard and usage Examples views with `BatchIncremental.sync`
+  * (recompute, read the table back, diff, apply). Cost grows with log and
+  * view size, not churn. */
 final class ResyncBatch(ctx: Ctx) extends Workload {
-  private val shape = LogShape(machines = 5000, sources = 8, staleShare = 0.1, skew = 0.6, drillShare = 0.9)
-  private val SliceEvents = 250
+  private val shape = LogShape(machines = 5000, sources = 8, staleShare = 0.05, skew = 0.0)
+  private val ArrivalRate = 200
   private val gen = new Gen(shape, ctx.seed)
   private val events = ArrayBuffer.fill(60000)(gen.next())
   private val logDir = ctx.dir("resync/log")
@@ -309,8 +340,8 @@ final class ResyncBatch(ctx: Ctx) extends Workload {
     val offsets = gen.highWater
     Trace.span("resync.round", round) {
       views().foreach { case (sink, view) =>
-        diffRows += Trace.span("BatchIncremental.sync", round)(
-          BatchIncremental.sync(ctx.spark, view, sink, offsets, round))
+        diffRows += ctx.meter.call(Trace.span("BatchIncremental.sync", round)(
+          BatchIncremental.sync(ctx.spark, view, sink, offsets, round)))
       }
     }
     round += 1
@@ -332,30 +363,36 @@ final class ResyncBatch(ctx: Ctx) extends Workload {
   def window(seconds: Int): Window = {
     ctx.meter.reset(); diffRows = 0
     val t0 = System.nanoTime()
+    val startUs = Clock.micros()
+    var arrivals = 0L
     val secs = ArrayBuffer.empty[Double]
     val rates = ArrayBuffer.empty[Double]
+    val lat = ArrayBuffer.empty[Double]
     while (secs.isEmpty || System.nanoTime() - t0 < seconds * 1000000000L) {
-      val slice = Seq.fill(SliceEvents)(gen.next())
-      Gen.writeFile(logDir, f"part-$files%07d.jsonl", slice, Ctx.mtime(files))
+      val now = Clock.micros()
+      def due = startUs + arrivals * 1000000L / ArrivalRate
+      val arrived = ArrayBuffer.empty[LogEvent]
+      while (due <= now) { arrived += gen.next(stampMicros = due); arrivals += 1 }
+      Gen.writeFile(logDir, f"part-$files%07d.jsonl", arrived.toSeq, Ctx.mtime(files))
       files += 1
-      events ++= slice
+      events ++= arrived
       val r0 = System.nanoTime()
       syncAll()
+      val commitUs = Clock.micros()
       val s = (System.nanoTime() - r0) / 1e9
       secs += s
       rates += events.size / s
+      // an arrival is visible once the round's last sync commits
+      lat ++= arrived.map(e => (commitUs - e.tsMicros) / 1000.0)
     }
-    val mismatch = Reference.bagDiff(dash.readRows(), Reference.dashboard(events)) +
-      Reference.bagDiff(usage.readRows(), Reference.usage(events))
-    // every event of a slice is due when the slice is appended and
-    // visible once the round's last sync commits
-    val lat = secs.toSeq.flatMap(s => Seq.fill(SliceEvents)(s * 1000.0))
+    val mismatch = Reference.bagDiff(dash.readRows(), Reference.dashboard(events.toSeq)) +
+      Reference.bagDiff(usage.readRows(), Reference.usage(events.toSeq))
     Window(
       e2e = Map(
         "events_per_s" -> Stats.median(rates.toSeq),
         "resync_s" -> Stats.median(secs.toSeq)),
-      latencyMs = lat,
-      layers = ctx.sinkLayers(),
+      latencyMs = lat.toSeq,
+      layers = ctx.sinkLayers(arrivals),
       attempted = secs.size.toLong * 2, mismatch = mismatch,
       samples = Map("rounds" -> secs.size, "latency" -> lat.size), progress = Nil)
   }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GenSpec extends AnyFunSuite {
 
-  private val shape = LogShape(machines = 300, sources = 8, staleShare = 0.1, skew = 0.8, drillShare = 0.9)
+  private val shape = LogShape(machines = 300, sources = 8, staleShare = 0.1, skew = 0.8)
 
   test("one seed always gives the same log; another seed a different one") {
     def log(seed: Long) = { val g = new Gen(shape, seed); Vector.fill(5000)(g.next()) }
@@ -29,7 +29,7 @@ class GenSpec extends AnyFunSuite {
     }.sum
     assert(stale.toDouble / evs.size > 0.05 && stale.toDouble / evs.size < 0.15)
     assert(evs.exists(e => !e.started && e.order.startsWith("x")))
-    assert(evs.exists(_.machine.startsWith("Press")) && evs.exists(_.machine.startsWith("Drill")))
+    assert(evs.forall(_.machine.startsWith("Drill")))
   }
 
   test("skew concentrates events on few machines") {

@@ -13,13 +13,20 @@ class StatsSpec extends AnyFunSuite {
     assert(Stats.median(Seq(3.0, 1.0, 2.0)) === 2.0)
   }
 
-  test("a tail percentile needs at least 10 samples beyond it") {
-    assert(Stats.beyond(1000, 0.99) === 10)
+  test("a tail percentile needs at least 10 distinct samples beyond it") {
+    assert(Stats.beyond(xs(1000), 990.0) === 10)
     assert(Stats.tail(xs(1000), 0.99) === 990.0)
     assert(intercept[IllegalArgumentException](Stats.tail(xs(999), 0.99))
-      .getMessage.contains("10 samples beyond"))
+      .getMessage.contains("10 distinct samples beyond"))
     assert(Stats.tail(xs(20), 0.5) === 10.0)
     intercept[IllegalArgumentException](Stats.tail(xs(19), 0.5))
+  }
+
+  test("copies of one observation do not make a tail") {
+    // 9 distinct observations, each copied 1000 times
+    val copied = (1 to 9).flatMap(v => Seq.fill(1000)(v.toDouble))
+    intercept[IllegalArgumentException](Stats.tail(copied, 0.99))
+    intercept[IllegalArgumentException](Stats.tail(copied, 0.5))
   }
 
   test("no samples is an error, not a zero") {
