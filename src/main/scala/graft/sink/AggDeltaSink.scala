@@ -33,24 +33,17 @@ import org.apache.spark.sql.functions._
 class AggDeltaSink(url: String, val name: String, version: Int,
                    keys: Seq[ColumnSpec], sums: Seq[ColumnSpec],
                    dialect: SinkDialect = AnsiDialect)
-    extends Serializable {
+    extends DeltaSink(url, name, dialect) {
 
-  private val spec = TableSpec(name, version,
+  private[sink] val spec = TableSpec(name, version,
     keys ++ Seq(ColumnSpec("cnt", "BIGINT")) ++ sums)
   private val keySpec = TableSpec(name, version, keys)
-  private val base = new JdbcDeltaSink(url, spec, dialect)
 
-  def bootstrap(): Boolean = base.bootstrap()
+  private[sink] def tables: Seq[TableSpec] = Seq(spec)
 
-  /** Union-member bootstrap (data table + version row only; the
-    * union's shared offsets/batch tables are the group's) — lets an
-    * aggregate view join a [[UnionDeltaSink]] next to raw members. */
-  private[sink] def bootstrapMember(): Boolean = base.bootstrapMember()
-  def getOffsets(): Map[String, Long] = base.getOffsets()
-  def lastBatchId(): Option[Long] = base.lastBatchId()
-  def readRows(): Seq[Seq[Any]] = base.readRows()
+  def readRows(): Seq[Seq[Any]] = readTable(spec)
   def readAsDataFrame(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    base.readAsDataFrame(spark)
+    readTableAsDataFrame(spark, spec)
 
   private def numericallyZero(v: Any): Boolean = v match {
     case null => true // SQL SUM over an empty/all-null slice
@@ -59,7 +52,7 @@ class AggDeltaSink(url: String, val name: String, version: Int,
   }
 
   /** Apply one batch of per-group adjustments + offsets in ONE
-    * transaction ([[DeltaSql.inBatchTxn]] — the same exactly-once
+    * transaction ([[DeltaSink.inBatchTxn]] — the same exactly-once
     * protocol as the raw-row sinks). `adjustments`: (key values, dn,
     * per-sum-column ds). Replayed batch ids are skipped. */
   def applyAdjustments(offsets: Map[String, Long], batchId: Long,
@@ -69,10 +62,7 @@ class AggDeltaSink(url: String, val name: String, version: Int,
   /** Iterator form — adjustments stream through the open transaction. */
   def applyAdjustmentsStreamed(offsets: Map[String, Long], batchId: Long,
                                adjustments: Iterator[(Seq[Any], Long, Seq[Any])]): Boolean =
-    DeltaSql.inBatchTxn(url, s"${name}_batches", spec.offsetsTable,
-      batchId, offsets, dialect) { c =>
-      applyAdjustmentsInTxn(c, adjustments)
-    }
+    inBatchTxn(batchId, offsets)(applyAdjustmentsInTxn(_, adjustments))
 
   /** The per-group UPDATE/INSERT/zero-eliminate protocol over an OPEN
     * transaction — shared by [[applyAdjustmentsStreamed]] (own txn) and
@@ -125,14 +115,8 @@ class AggDeltaSink(url: String, val name: String, version: Int,
     * (dn, ds...) runs distributed — only churned groups are collected.
     * `_source`/`_offset` columns feed the offsets map if present. */
   def foreachBatchWriter(): (DataFrame, Long) => Unit = { (df, batchId) =>
-    val hasOffsets = df.columns.contains("_source")
     val adj = adjustmentsOf(df.drop("_source", "_offset"))
-    val offsets: Map[String, Long] =
-      if (hasOffsets)
-        df.groupBy("_source").max("_offset").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
-    applyAdjustmentsStreamed(offsets, batchId, adj)
+    applyAdjustmentsStreamed(offsetsOf(df), batchId, adj)
     ()
   }
 

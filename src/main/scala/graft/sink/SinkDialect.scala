@@ -21,8 +21,6 @@ package graft.sink
   *    `updlock`-guarded if-exists upsert, and a SERIALIZABLE session pin.
   */
 trait SinkDialect extends Serializable {
-  def name: String
-
   def insertSql(spec: TableSpec): String =
     s"INSERT INTO ${spec.name} (${spec.colNames.mkString(", ")}) " +
       s"VALUES (${spec.colNames.map(_ => "?").mkString(", ")})"
@@ -59,30 +57,20 @@ trait SinkDialect extends Serializable {
   def createIndexSql(index: String, table: String, definition: String): String =
     s"CREATE INDEX $index ON $table ($definition)"
 
-  /** True if `createTableSql` is self-guarding (IF NOT EXISTS built in) —
-    * the bootstrap then skips its metadata existence probe. */
-  def ddlIsIdempotent: Boolean = false
-
   /** Statements to run once per connection (isolation pins etc.). */
   def sessionInitSql: Seq[String] = Seq.empty
 }
 
 /** Portable ANSI statements; the live Derby suite runs this dialect. */
-case object AnsiDialect extends SinkDialect {
-  val name = "ansi"
-}
+case object AnsiDialect extends SinkDialect
 
 /** PostgreSQL statements (reference postgre.rs + db/mod.rs:384-394). */
 case object PostgresDialect extends SinkDialect {
-  val name = "postgres"
-
   override def createTableSql(name: String, definition: String): String =
     s"CREATE TABLE IF NOT EXISTS $name ($definition)"
 
   override def createIndexSql(index: String, table: String, definition: String): String =
     s"CREATE INDEX IF NOT EXISTS $index ON $table ($definition)"
-
-  override def ddlIsIdempotent: Boolean = true
 
   override def offsetsUpsertSql(table: String): Option[String] = Some(
     s"INSERT INTO $table (source, offset_) VALUES (?, ?) " +
@@ -91,8 +79,6 @@ case object PostgresDialect extends SinkDialect {
 
 /** SQL Server statements (reference mssql.rs). */
 case object MssqlDialect extends SinkDialect {
-  val name = "mssql"
-
   override def createTableSql(name: String, definition: String): String =
     s"IF NOT EXISTS (SELECT * FROM sys.tables WHERE name = '$name') " +
       s"CREATE TABLE $name ($definition)"
@@ -100,8 +86,6 @@ case object MssqlDialect extends SinkDialect {
   override def createIndexSql(index: String, table: String, definition: String): String =
     s"IF NOT EXISTS (SELECT * FROM sys.indexes WHERE name = '$index') " +
       s"CREATE INDEX $index ON $table ($definition)"
-
-  override def ddlIsIdempotent: Boolean = true
 
   /** mssql.rs:216-218 `delete top ({param}) {clause}` — the cap is a
     * bind parameter, so one prepared statement serves every retraction. */

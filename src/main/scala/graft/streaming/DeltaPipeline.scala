@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
-import graft.sink.JdbcDeltaSink
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, FlatMapGroupsWithState}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import graft.sink.DeltaSink
 
 /** The incremental profile's runtime wiring — the analog of the
   * reference's ingestion driver (runner.rs:151-358) on Structured
@@ -16,57 +16,40 @@ import graft.sink.JdbcDeltaSink
   *    `maxOffsetsPerTrigger` on the source;
   *  - `sync_channel(1)` backpressure (runner.rs:103-105) → micro-batch
   *    serialization (one batch in flight, inherent);
-  *  - exactly-once offsets+data transaction → [[JdbcDeltaSink]] inside
-  *    `foreachBatch` with batch-id idempotence.
+  *  - exactly-once offsets+data transaction → a [[graft.sink.DeltaSink]]
+  *    (raw, aggregate or union) inside `foreachBatch` with batch-id
+  *    idempotence.
   */
 object DeltaPipeline {
 
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
   /** Wire a streaming delta DataFrame (carrying a `mult` column, or
-    * plain rows treated as inserts) into a transactional JDBC sink. */
-  def writer(deltas: DataFrame, sink: JdbcDeltaSink,
-             checkpoint: String,
-             trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] = {
+    * plain rows treated as inserts; a `_table` tag for a union sink)
+    * into a transactional sink, in the output mode of [[outputMode]]. */
+  def start(deltas: DataFrame, sink: DeltaSink, checkpoint: String,
+            trigger: Trigger = DefaultTrigger): StreamingQuery = {
     sink.bootstrap()
     deltas.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(sink.foreachBatchWriter())
-  }
-
-  def start(deltas: DataFrame, sink: JdbcDeltaSink, checkpoint: String,
-            trigger: Trigger = DefaultTrigger): StreamingQuery =
-    writer(deltas, sink, checkpoint, trigger).start()
-
-  /** Aggregate-view variant: the delta stream maintains a
-    * keys → (cnt, sums…) table via [[graft.sink.AggDeltaSink]] —
-    * per-batch work is O(churned groups), never a recompute. */
-  def startAgg(deltas: DataFrame, sink: graft.sink.AggDeltaSink,
-               checkpoint: String,
-               trigger: Trigger = DefaultTrigger): StreamingQuery = {
-    sink.bootstrap()
-    deltas.writeStream
-      .outputMode("update")
+      .outputMode(outputMode(deltas))
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch(sink.foreachBatchWriter())
       .start()
   }
 
-  /** Union variant (reference K4): one delta stream carrying a `_table`
-    * tag feeds several member tables; every micro-batch commits all
-    * members + the shared offsets in ONE transaction. */
-  def startUnion(deltas: DataFrame, sink: graft.sink.UnionDeltaSink,
-                 checkpoint: String,
-                 trigger: Trigger = DefaultTrigger): StreamingQuery = {
-    sink.bootstrap()
-    deltas.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(sink.foreachBatchWriter())
-      .start()
+  /** The output mode Spark accepts for the analyzed plan: `update` when
+    * it holds a streaming aggregate or an update-mode
+    * `(flat)MapGroupsWithState`, whose emitted rows are per-key updates;
+    * otherwise `append`, which Spark requires for append-mode
+    * `flatMapGroupsWithState` and stream-stream joins and which emits
+    * the same rows for stateless plans. */
+  private def outputMode(deltas: DataFrame): String = {
+    val updates = deltas.queryExecution.analyzed.exists {
+      case a: Aggregate => a.isStreaming
+      case f: FlatMapGroupsWithState => f.isStreaming && f.outputMode == OutputMode.Update()
+      case _ => false
+    }
+    if (updates) "update" else "append"
   }
 }

@@ -14,8 +14,8 @@ import graft.streaming.DeltaPipeline
 class AggViewSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshSink(db: String) = new AggDeltaSink(
-    s"jdbc:derby:memory:$db;create=true", "machine_stats", 1,
+  private def freshSink(db: String, version: Int = 1) = new AggDeltaSink(
+    s"jdbc:derby:memory:$db;create=true", "machine_stats", version,
     keys = Seq(ColumnSpec("machine", "VARCHAR(32)", index = true)),
     sums = Seq(ColumnSpec("total_pcs", "BIGINT")))
 
@@ -93,13 +93,28 @@ class AggViewSpec extends SparkTestBase {
     assert(view(sink) === expect, "incremental view ≡ recompute at every point")
   }
 
+  test("schema version bump drops and rebuilds the view, clearing its offsets and batch stamps") {
+    val v1 = freshSink("aggvers")
+    v1.bootstrap()
+    assert(v1.applyAdjustments(Map("s" -> 5L), 0L, Seq((Seq("Drill1"), 1L, Seq(4L)))))
+    assert(!freshSink("aggvers").bootstrap(), "same version: keep data")
+    assert(view(v1) === Map("Drill1" -> ((1L, 4L))))
+    val v2 = freshSink("aggvers", version = 2)
+    assert(v2.bootstrap(), "version bump: rebuild")
+    assert(view(v2).isEmpty && v2.getOffsets().isEmpty)
+    assert(v2.lastBatchId() === None, "stale batch stamps must be cleared")
+    // the replayed batch 0 must APPLY, not be skipped as already applied
+    assert(v2.applyAdjustments(Map("s" -> 5L), 0L, Seq((Seq("Drill1"), 1L, Seq(4L)))))
+    assert(view(v2) === Map("Drill1" -> ((1L, 4L))) && v2.getOffsets() === Map("s" -> 5L))
+  }
+
   test("streaming end-to-end: delta stream maintains the aggregate view") {
     implicit val sqlCtx = spark.sqlContext
     val sink = freshSink("aggv3")
     val mem = MemoryStream[(String, Long, Long)]
     val deltas = mem.toDF().toDF("machine", "total_pcs", "mult")
 
-    val q = DeltaPipeline.startAgg(deltas, sink,
+    val q = DeltaPipeline.start(deltas, sink,
       java.nio.file.Files.createTempDirectory("graft-aggckpt").toString,
       Trigger.ProcessingTime(0L))
     try {
@@ -126,7 +141,7 @@ class AggViewSpec extends SparkTestBase {
     union.bootstrap()
 
     // one batch feeds the raw audit table AND its rollup atomically
-    assert(union.applyMixed(Map("s" -> 10L), 0L,
+    assert(union.applyDeltas(Map("s" -> 10L), 0L,
       Map("audit_rows" -> Seq((Seq("m1", 5L), 1L), (Seq("m1", 7L), 1L))),
       Map("machine_rollup" -> Seq((Seq("m1"), 2L, Seq(12L))))))
     assert(new JdbcDeltaSink(url, rawSpec).readRows().size === 2)
@@ -134,7 +149,7 @@ class AggViewSpec extends SparkTestBase {
     assert(union.getOffsets() === Map("s" -> 10L))
 
     // redelivery: union-wide no-op across BOTH member kinds
-    assert(!union.applyMixed(Map("s" -> 99L), 0L,
+    assert(!union.applyDeltas(Map("s" -> 99L), 0L,
       Map("audit_rows" -> Seq((Seq("m2", 1L), 1L))),
       Map("machine_rollup" -> Seq((Seq("m2"), 1L, Seq(1L))))))
     assert(new JdbcDeltaSink(url, rawSpec).readRows().size === 2)
@@ -143,7 +158,7 @@ class AggViewSpec extends SparkTestBase {
     // an over-retraction in the AGG member rolls back the RAW member's
     // rows of the same batch — all-members-or-nothing
     intercept[IllegalStateException] {
-      union.applyMixed(Map.empty, 1L,
+      union.applyDeltas(Map.empty, 1L,
         Map("audit_rows" -> Seq((Seq("m9", 1L), 1L))),
         Map("machine_rollup" -> Seq((Seq("ghost"), -5L, Seq(-99L)))))
     }
@@ -151,7 +166,7 @@ class AggViewSpec extends SparkTestBase {
       .forall(_.head != "m9"), "raw rows of the aborted batch rolled back")
     assert(view(agg) === Map("m1" -> ((2L, 12L))))
     // the aborted batch id is NOT stamped: a corrected retry applies
-    assert(union.applyMixed(Map.empty, 1L,
+    assert(union.applyDeltas(Map.empty, 1L,
       Map("audit_rows" -> Seq((Seq("m9", 1L), 1L))),
       Map("machine_rollup" -> Seq((Seq("m9"), 1L, Seq(1L))))))
     assert(view(agg) === Map("m1" -> ((2L, 12L)), "m9" -> ((1L, 1L))))

@@ -70,38 +70,41 @@ class DialectSpec extends SparkTestBase {
 
   test("unconsolidated batch: a queued insert is flushed before the same tuple's retraction") {
     val sink = new JdbcDeltaSink("jdbc:derby:memory:dialect_unconsol;create=true",
-      spec, AnsiDialect, rowBatchSize = 100)
+      spec, AnsiDialect)
     sink.bootstrap()
-    // insert sits in the statement batch (size < rowBatchSize) when the
+    // insert sits in the statement batch (size < 1000 rows) when the
     // retraction arrives — the delete must observe it, netting zero rows
     assert(sink.applyDeltas(Map.empty, 0L,
       Seq((Seq[Any]("z", 9L), 1L), (Seq[Any]("z", 9L), -1L))))
     assert(sink.readRows().isEmpty)
   }
 
-  test("bounded batching: tiny rowBatchSize round-trips a large delta batch on Derby") {
-    // rowBatchSize = 7 forces dozens of executeBatch flushes across a
-    // 500-row batch, interleaved with retractions in the same txn
+  test("bounded batching: 2,500 deltas round-trip through 1000-row batches on Derby") {
+    // the 1000-row statement batch flushes twice inside a 2,500-row batch
     val sink = new JdbcDeltaSink("jdbc:derby:memory:dialect_batch;create=true",
-      spec, AnsiDialect, rowBatchSize = 7)
+      spec, AnsiDialect)
     sink.bootstrap()
-    val big = (1 to 500).map(i => (Seq[Any](s"k$i", i.toLong), 1L))
+    val big = (1 to 2500).map(i => (Seq[Any](s"k$i", i.toLong), 1L))
     assert(sink.applyDeltas(Map("s" -> 1L), 0L, big))
-    assert(sink.readRows().size === 500)
-    // mixed batch: retract 100 of them, double 50 others — one txn
-    val mixed = (1 to 100).map(i => (Seq[Any](s"k$i", i.toLong), -1L)) ++
-      (101 to 150).map(i => (Seq[Any](s"k$i", i.toLong), 1L))
+    assert(sink.readRows().size === 2500)
+    // mixed batch, one txn: double 1,200 rows (a flush at the 1,000th
+    // insert), retract 100 (each delete flushes the inserts queued
+    // before it), double 1,200 more
+    val mixed = (101 to 1300).map(i => (Seq[Any](s"k$i", i.toLong), 1L)) ++
+      (1 to 100).map(i => (Seq[Any](s"k$i", i.toLong), -1L)) ++
+      (1301 to 2500).map(i => (Seq[Any](s"k$i", i.toLong), 1L))
     assert(sink.applyDeltas(Map("s" -> 2L), 1L, mixed))
     val rows = sink.readRows().map(r => r(0).toString)
-    assert(rows.size === 450)
-    assert(!rows.contains("k1") && rows.count(_ == "k101") === 2)
+    assert(rows.size === 4800)
+    assert(!rows.contains("k1") && rows.count(_ == "k101") === 2 &&
+      rows.count(_ == "k2500") === 2)
     assert(sink.getOffsets() === Map("s" -> 2L))
     // over-retraction mid-batch still rolls the whole txn back
     intercept[IllegalStateException] {
       sink.applyDeltas(Map("s" -> 3L), 2L,
         Seq((Seq[Any]("k200", 200L), 1L), (Seq[Any]("k300", 300L), -5L)))
     }
-    assert(sink.readRows().size === 450, "failed txn left no partial writes")
+    assert(sink.readRows().size === 4800, "failed txn left no partial writes")
     assert(sink.getOffsets() === Map("s" -> 2L))
   }
 }

@@ -39,8 +39,8 @@ class FileStreamSpec extends SparkTestBase {
       .withColumn("mult", lit(1L))
 
     def run(): Unit = {
-      val q = DeltaPipeline.writer(stream(), sink, ckpt,
-        Trigger.AvailableNow()).start()
+      val q = DeltaPipeline.start(stream(), sink, ckpt,
+        Trigger.AvailableNow())
       q.awaitTermination() // AvailableNow terminates once backlog drains
     }
 

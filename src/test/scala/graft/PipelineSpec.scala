@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.streaming.{Delta, Monotonic, DeltaPipeline}
+import graft.streaming.{Delta, Monotonic, DeltaPipeline, SessionEvent, SessionizeStream}
 import graft.sink.{ColumnSpec, TableSpec, JdbcDeltaSink}
 
 /** Machine-dashboard reading: current status per machine (reference
@@ -60,6 +60,41 @@ class PipelineSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("stream → append-mode usage intervals → JDBC delta sink (output mode from the plan)") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    val sink = new JdbcDeltaSink(
+      "jdbc:derby:memory:usagepipe;create=true",
+      TableSpec("machine_usage", 1, Seq(
+        ColumnSpec("machine", "VARCHAR(32)", index = true),
+        ColumnSpec("order_id", "VARCHAR(32)"),
+        ColumnSpec("started_micros", "BIGINT"),
+        ColumnSpec("duration_micros", "BIGINT"))))
+
+    // usageStream is an append-mode flatMapGroupsWithState: Spark rejects
+    // it in update mode, so the pipeline must pick append from the plan
+    val mem = MemoryStream[SessionEvent]
+    val usage = SessionizeStream.usageStream(mem.toDS()).toDF()
+      .select(col("machine"), col("order").as("order_id"),
+        col("startedMicros").as("started_micros"),
+        col("durationMicros").as("duration_micros"))
+
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-usage-ckpt").toString
+    val q = DeltaPipeline.start(usage, sink, ckpt, Trigger.ProcessingTime(0L))
+    try {
+      mem.addData(SessionEvent("Drill1", 1L, started = true, "4711", 1000L))
+      q.processAllAvailable()
+      assert(sink.readRows().isEmpty, "an open interval emits nothing")
+      // the stop in batch 2 closes the start carried in state from batch 1
+      mem.addData(SessionEvent("Drill1", 2L, started = false, "4711", 5000L))
+      q.processAllAvailable()
+      assert(sink.readRows().map(r => (r(0), r(1),
+          r(2).asInstanceOf[Number].longValue, r(3).asInstanceOf[Number].longValue))
+        === Seq(("Drill1", "4711", 1000L, 4000L)))
+    } finally q.stop()
+  }
+
   test("stream → union sink: two tagged views commit per batch in one txn") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -85,7 +120,7 @@ class PipelineSpec extends SparkTestBase {
     val tagged = dash.unionByName(log)
 
     val ckpt = java.nio.file.Files.createTempDirectory("graft-union-ckpt").toString
-    val q = DeltaPipeline.startUnion(tagged, union, ckpt,
+    val q = DeltaPipeline.start(tagged, union, ckpt,
       Trigger.ProcessingTime(0L))
     try {
       mem.addData(("Drill1", 100L), ("Drill2", 150L))

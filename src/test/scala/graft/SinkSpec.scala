@@ -76,6 +76,10 @@ class SinkSpec extends SparkTestBase {
     val v2 = newSink("vers", version = 2)
     assert(v2.bootstrap(), "version bump: rebuild")
     assert(v2.readRows().isEmpty && v2.getOffsets().isEmpty)
+    assert(v2.lastBatchId() === None, "stale batch stamps must be cleared")
+    // the replayed batch 0 must APPLY, not be skipped as already applied
+    assert(v2.applyDeltas(Map("s" -> 5L), 0L, Seq((Seq("aa", 1L), 1L))))
+    assert(v2.readRows().size === 1 && v2.getOffsets() === Map("s" -> 5L))
   }
 
   test("foreachBatch writer consolidates the micro-batch before applying") {
